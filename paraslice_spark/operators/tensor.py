@@ -10,21 +10,26 @@ Spark-first:
 - **T2** partitions coordinates into dense mode-0 slice slabs: one RDD
   element = ``(slice_id, np.ndarray(J, K))``, batched per partition — the
   reference's namesake layout, BLAS-friendly, cached across iterations.
-- **T3-T6** per-iteration kernels: numpy MTTKRP inside ``mapPartitions``,
-  ``treeAggregate(depth=2)`` reduction (network carries O(dim×R), never
-  O(IJK)), driver-local R×R Gram/pinv solve, column normalization, and the
-  cheap-fit identity ``‖X−X̂‖² = ‖X‖² − 2⟨M2, C̃⟩ + λᵀ(AᵀA∘BᵀB∘CᵀC)λ``
-  (one cached ‖X‖² pass, no reconstruction).
+- **T3-T6** one aggregate job per ALS iteration: each slab recomputes its
+  own rows of the mode-0 factor and returns the R×R Gram plus the
+  slice-contracted partial ``X ×₀ Aᵀ`` (J×K×R, never O(IJK)); the driver
+  derives both small-mode MTTKRPs from that partial, solves R×R
+  pseudo-inverses, normalizes, and reads the fit from the identity
+  ``‖X−X̂‖² = ‖X‖² − 2⟨M2, C̃⟩ + λᵀ(AᵀA∘BᵀB∘CᵀC)λ`` (‖X‖² rides the first
+  job; no reconstruction).
 - **T7/T8** the ALS driver loop + factor export joined back to natural keys.
 
 100 TB discipline (SURVEY §2.5): raw tensor data stays partitioned for the
-whole run; only factors (O(max_dim×R)) and Grams (O(R²)) cross the
-cluster/driver boundary; stale broadcasts are unpersisted every mode sweep.
+whole run; the mode-0 factor never has to leave its slabs; only B, C
+(O((J+K)×R)), Grams (O(R²)) and the J×K×R partials cross the
+cluster/driver boundary.  J and K are bounded (schema and calendar), so
+driver traffic does not grow with I.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
 import numpy as np
 from pyspark import StorageLevel
@@ -129,10 +134,24 @@ def tensor_shape(coords: DataFrame) -> tuple[int, int, int]:
     return int(row["si"]), int(row["sj"]), int(row["sk"])
 
 
+#: Dense float64 bytes one slab partition holds before the slab count grows
+#: past one partition per core.
+_SLAB_BYTES = 128 << 20
+
+
+def slab_count(spark: SparkSession, shape: tuple[int, int, int]) -> int:
+    """Slab partitions for a dense I×J×K tensor: one per core
+    (``defaultParallelism``), more once a partition would hold over
+    ``_SLAB_BYTES`` of float64 cells, never more than the I slices."""
+    si, sj, sk = shape
+    by_bytes = -(-si * sj * sk * 8 // _SLAB_BYTES)
+    return max(1, min(si, max(spark.sparkContext.defaultParallelism, by_bytes)))
+
+
 def build_slices(
     coords: DataFrame,
     shape: tuple[int, int, int],
-    n_parts: int = 8,
+    n_parts: int | None = None,
     persist: bool = True,
 ):
     """T2: coords -> RDD of BATCHED slabs: one element per partition,
@@ -153,8 +172,10 @@ def build_slices(
     row-granular hop left is one pickled row PER SLICE (a ~sj×sk float64
     payload blob, not sj×sk Rows).  Output batches are chunked ≤64 slices
     so no RecordBatch approaches Arrow's 2 GiB int32-offset binary limit.
+    ``n_parts`` defaults to :func:`slab_count`.
     """
     _, sj, sk = shape
+    n_parts = n_parts or slab_count(coords.sparkSession, shape)
 
     def to_slices(batches):
         import pyarrow as pa
@@ -213,42 +234,6 @@ def build_slices(
     return rdd
 
 
-def _mttkrp(slabs, mode: int, shape, rank: int, bA, bB, bC, sc):
-    """T3: distributed MTTKRP — one batched numpy kernel per partition +
-    treeAggregate(depth=2).
-
-    Per batched slab block X (m×J×K) with slice ids ``ids``:
-      mode 0: M[ids,:] = ((X·C) ∘ B).sum(axis=1)        — (m,J,R)→(m,R)
-      mode 1: M       += ((X·C) ∘ A[ids,None,:]).sum(0)  — →(J,R)
-      mode 2: M       += ((Xᵀ·B) ∘ A[ids,None,:]).sum(0) — →(K,R)
-    Partials are (dim×R) ndarrays — that is ALL that crosses the network.
-    """
-    si, sj, sk = shape
-    dim = (si, sj, sk)[mode]
-    zero = np.zeros((dim, rank), dtype=np.float64)
-
-    def seq(acc, item):
-        ids, x = item  # x: (m, J, K)
-        if mode == 0:
-            t = x @ bC.value  # (m, J, R)
-            acc[ids, :] += (t * bB.value[None, :, :]).sum(axis=1)
-        elif mode == 1:
-            t = x @ bC.value  # (m, J, R)
-            acc += (t * bA.value[ids][:, None, :]).sum(axis=0)
-        else:
-            t = np.swapaxes(x, 1, 2) @ bB.value  # (m, K, R)
-            acc += (t * bA.value[ids][:, None, :]).sum(axis=0)
-        return acc
-
-    comb = lambda a, b: a + b  # noqa: E731
-    if dim * rank <= 1_000_000:
-        # partials are small: a flat aggregate (one stage) beats the tree's
-        # extra combiner stage. The tree matters when dim×R partials are
-        # MB-sized and the driver would otherwise ingest n_parts of them.
-        return slabs.aggregate(zero, seq, comb)
-    return slabs.treeAggregate(zero, seq, comb, depth=2)
-
-
 def _solve(mttkrp: np.ndarray, gram_prod: np.ndarray) -> np.ndarray:
     """T4: factor update — driver-local R×R pseudo-inverse."""
     return mttkrp @ np.linalg.pinv(gram_prod)
@@ -275,105 +260,6 @@ class CPModel:
     shape: tuple = ()
 
 
-def parafac(
-    spark: SparkSession,
-    coords: DataFrame,
-    rank: int = 3,
-    tol: float = 1e-6,
-    max_iter: int = 25,
-    seed: int = 42,
-    n_parts: int = 8,
-) -> CPModel:
-    """T7: CP-ALS driver loop (SURVEY §3.3 lifecycle).
-
-    Control never leaves this function; per iteration each mode does one
-    broadcast (factors down) and one treeAggregate (partials up). Fit uses
-    the Gram identity — no reconstruction pass.
-    """
-    sc = spark.sparkContext
-    shape = tensor_shape(coords)
-    si, sj, sk = shape
-    slabs = build_slices(coords, shape, n_parts)
-    norm_x_sq = slabs.treeAggregate(
-        0.0, lambda acc, it: acc + float((it[1] ** 2).sum()), lambda a, b: a + b, depth=2
-    )
-
-    rng = np.random.default_rng(seed)
-    A = rng.standard_normal((si, rank))
-    B = rng.standard_normal((sj, rank))
-    C = rng.standard_normal((sk, rank))
-    A, _ = _normalize(A)
-    B, _ = _normalize(B)
-    C, _ = _normalize(C)
-    lam = np.ones(rank)
-
-    fit_prev, fit, trace = 0.0, 0.0, []
-    it = 0
-    for it in range(1, max_iter + 1):
-        stale = []
-        bA, bB, bC = sc.broadcast(A), sc.broadcast(B), sc.broadcast(C)
-        stale += [bA, bB, bC]
-
-        m0 = _mttkrp(slabs, 0, shape, rank, bA, bB, bC, sc)
-        A = _solve(m0, (B.T @ B) * (C.T @ C))
-        A, _ = _normalize(A)
-        bA = sc.broadcast(A)
-        stale.append(bA)
-
-        m1 = _mttkrp(slabs, 1, shape, rank, bA, bB, bC, sc)
-        B = _solve(m1, (A.T @ A) * (C.T @ C))
-        B, _ = _normalize(B)
-        bB = sc.broadcast(B)
-        stale.append(bB)
-
-        m2 = _mttkrp(slabs, 2, shape, rank, bA, bB, bC, sc)
-        c_raw = _solve(m2, (A.T @ A) * (B.T @ B))
-        C, lam = _normalize(c_raw)
-
-        # T6 cheap fit: ⟨X,X̂⟩ = Σ M2∘C̃ ;  ‖X̂‖² = λᵀ(AᵀA∘BᵀB∘CᵀC)λ
-        inner = float((m2 * c_raw).sum())
-        norm_model_sq = float(
-            lam @ (((A.T @ A) * (B.T @ B) * (C.T @ C)) @ lam)
-        )
-        resid_sq = max(0.0, norm_x_sq - 2.0 * inner + norm_model_sq)
-        fit = 1.0 - np.sqrt(resid_sq) / np.sqrt(norm_x_sq)
-        trace.append(fit)
-
-        for b in stale:
-            b.unpersist()
-        if it > 1 and abs(fit - fit_prev) < tol:
-            break
-        fit_prev = fit
-
-    # canonical order: components by λ descending (deterministic tiebreak
-    # not needed — λ ties have measure zero with random init)
-    order = np.argsort(-lam)
-    model = CPModel(
-        A=A[:, order], B=B[:, order], C=C[:, order], lam=lam[order],
-        fit=float(fit), n_iter=it, fit_trace=trace, shape=shape,
-    )
-    slabs.unpersist()
-    return model
-
-
-# --------------------------------------------------------------------------
-# Distributed-A CP-ALS (VERDICT r01 #9, docs/SCALE.md §CP-ALS extension)
-# --------------------------------------------------------------------------
-#
-# When the mode-0 dimension is huge (10^8 users), the I×R factor A no longer
-# fits the driver or a broadcast.  The slab layout makes the fix natural:
-# mode-0 MTTKRP writes only acc[ids] and modes 1/2 read only A[ids] — each
-# slab ever touches exactly its own rows of A.  So A lives row-partitioned
-# WITH the slabs: the mode-0 update is fully partition-local (M0_blk @ pinv,
-# zero shuffle), and the network carries only the R×R Gram AᵀA, the J×R /
-# K×R partials, and the (tiny) B/C broadcasts.  A is never normalized in
-# place; its raw column scales D = sqrt(diag(AᵀA_raw)) are divided out of
-# the Gram and the partials driver-side (Ã = A·D⁻¹ ⇒ M̃ = M·D⁻¹), which is
-# algebraically identical to the driver-local path without a second
-# distributed pass.  Lineage stays flat: each iteration maps over the
-# persisted slabs root, never over the previous iteration's RDD.
-
-
 @dataclass
 class CPModelDist:
     """T7-dist output: mode-0 factor stays row-partitioned on the cluster —
@@ -390,6 +276,126 @@ class CPModelDist:
     shape: tuple = ()
 
 
+def _cp_als(
+    coords: DataFrame,
+    rank: int,
+    tol: float,
+    max_iter: int,
+    seed: int,
+    n_parts: int | None,
+):
+    """T3-T7: the CP-ALS loop — ONE aggregate job per iteration over the
+    persisted slabs.
+
+    Each slab owns exactly its rows of the mode-0 factor A, so A never
+    leaves its partition: every job recomputes them from the current B, C
+    (``A_p = ((X_p·C)∘B).sum(1) · pinv(BᵀB∘CᵀC)``) and returns the R×R
+    Gram ``A_pᵀA_p`` plus the slice-contracted partial ``T_p = X_p ×₀ A_pᵀ``
+    (J×K×R); the first job also returns ‖X‖².  Both small-mode MTTKRPs
+    need only ``T = Σ_p T_p``, so the driver finishes the sweep without a
+    second job: ``M1 = Σ_k T·C`` → B, then ``M2 = Σ_j T·B`` → C.  A is
+    never normalized in place: its column scales D = sqrt(diag(AᵀA)) are
+    divided out of the Gram and of T (Ã = A·D⁻¹), which is the textbook
+    sweep algebraically.  Fit uses the Gram identity
+    ``‖X−X̂‖² = ‖X‖² − 2⟨M2, C̃⟩ + λᵀ(ÃᵀÃ∘BᵀB∘CᵀC)λ`` — no reconstruction.
+
+    Returns ``(model, slabs)``: the model's ``a_blocks`` are the final
+    iteration's A rows, still lazy over ``slabs``; the caller materializes
+    them and then unpersists the slabs.
+    """
+    shape = tensor_shape(coords)
+    _, sj, sk = shape
+    slabs = build_slices(coords, shape, n_parts)
+
+    rng = np.random.default_rng(seed)
+    B, _ = _normalize(rng.standard_normal((sj, rank)))
+    C, _ = _normalize(rng.standard_normal((sk, rank)))
+    # partials are small: a flat aggregate (one stage) beats the tree's
+    # extra combiner stage until they are MB-sized and the driver would
+    # otherwise ingest n_parts of them
+    if (rank + sj * sk) * rank <= 1_000_000:
+        aggregate = slabs.aggregate
+    else:
+        aggregate = partial(slabs.treeAggregate, depth=2)
+
+    norm_x_sq = None
+    fit_prev, fit, trace = 0.0, 0.0, []
+    it = 0
+    for it in range(1, max_iter + 1):
+        pinv_bc = np.linalg.pinv((B.T @ B) * (C.T @ C))
+
+        def a_rows(x, _B=B, _C=C, _p=pinv_bc):
+            return ((x @ _C) * _B[None, :, :]).sum(axis=1) @ _p  # (m, R)
+
+        def seq(acc, item, _a_rows=a_rows, _first=norm_x_sq is None):
+            gram, t, xx = acc
+            x = item[1]  # (m, J, K)
+            a = _a_rows(x)
+            gram += a.T @ a
+            t += np.tensordot(x, a, axes=(0, 0))  # (J, K, R)
+            return gram, t, (xx + float(np.vdot(x, x)) if _first else xx)
+
+        gram_raw, t, xx = aggregate(
+            (np.zeros((rank, rank)), np.zeros((sj, sk, rank)), 0.0),
+            seq,
+            lambda p, q: (p[0] + q[0], p[1] + q[1], p[2] + q[2]),
+        )
+        if norm_x_sq is None:
+            norm_x_sq = xx
+
+        d_inv = 1.0 / np.sqrt(np.clip(np.diag(gram_raw), 1e-300, None))
+        gram_a = gram_raw * np.outer(d_inv, d_inv)  # ÃᵀÃ
+        t *= d_inv  # X ×₀ Ãᵀ
+        B, _ = _normalize(_solve(np.einsum("jkr,kr->jr", t, C), gram_a * (C.T @ C)))
+        m2 = np.einsum("jkr,jr->kr", t, B)
+        c_raw = _solve(m2, gram_a * (B.T @ B))
+        C, lam = _normalize(c_raw)
+
+        # T6 cheap fit: ⟨X,X̂⟩ = Σ M2∘C̃ ;  ‖X̂‖² = λᵀ(ÃᵀÃ∘BᵀB∘CᵀC)λ
+        inner = float((m2 * c_raw).sum())
+        norm_model_sq = float(lam @ ((gram_a * (B.T @ B) * (C.T @ C)) @ lam))
+        resid_sq = max(0.0, norm_x_sq - 2.0 * inner + norm_model_sq)
+        fit = 1.0 - np.sqrt(resid_sq) / np.sqrt(norm_x_sq)
+        trace.append(fit)
+        if it > 1 and abs(fit - fit_prev) < tol:
+            break
+        fit_prev = fit
+
+    # canonical order: components by λ descending (deterministic tiebreak
+    # not needed — λ ties have measure zero with random init)
+    order = np.argsort(-lam)
+    a_blocks = slabs.map(
+        lambda blk, _a=a_rows, _d=d_inv, _o=order: (blk[0], (_a(blk[1]) * _d)[:, _o])
+    )
+    model = CPModelDist(
+        a_blocks=a_blocks, B=B[:, order], C=C[:, order], lam=lam[order],
+        fit=float(fit), n_iter=it, fit_trace=trace, shape=shape,
+    )
+    return model, slabs
+
+
+def parafac(
+    spark: SparkSession,
+    coords: DataFrame,
+    rank: int = 3,
+    tol: float = 1e-6,
+    max_iter: int = 25,
+    seed: int = 42,
+    n_parts: int | None = None,
+) -> CPModel:
+    """T7: CP-ALS with every factor driver-local — the :func:`_cp_als` loop
+    plus one collect of the final A blocks (I×R on the driver)."""
+    model, slabs = _cp_als(coords, rank, tol, max_iter, seed, n_parts)
+    A = np.zeros((model.shape[0], rank))
+    for ids, rows in model.a_blocks.collect():
+        A[ids] = rows
+    slabs.unpersist()
+    return CPModel(
+        A=A, B=model.B, C=model.C, lam=model.lam, fit=model.fit,
+        n_iter=model.n_iter, fit_trace=model.fit_trace, shape=model.shape,
+    )
+
+
 def parafac_distributed(
     spark: SparkSession,
     coords: DataFrame,
@@ -397,104 +403,16 @@ def parafac_distributed(
     tol: float = 1e-6,
     max_iter: int = 25,
     seed: int = 42,
-    n_parts: int = 8,
+    n_parts: int | None = None,
 ) -> CPModelDist:
     """T7-dist: CP-ALS with the mode-0 factor row-partitioned (never on the
-    driver, never broadcast).  Per iteration: one partition-local map (A
-    update fused with the slab scan) + two aggregate jobs (Gram+M1, then
-    M2).  Same kernels and fit identity as :func:`parafac`."""
-    sc = spark.sparkContext
-    shape = tensor_shape(coords)
-    si, sj, sk = shape
-    slabs = build_slices(coords, shape, n_parts)
-    norm_x_sq = slabs.treeAggregate(
-        0.0, lambda acc, it: acc + float((it[1] ** 2).sum()), lambda a, b: a + b, depth=2
-    )
-
-    rng = np.random.default_rng(seed)
-    B, _ = _normalize(rng.standard_normal((sj, rank)))
-    C, _ = _normalize(rng.standard_normal((sk, rank)))
-    lam = np.ones(rank)
-
-    def agg(rdd, zero, seq, comb, numel):
-        # same threshold as _mttkrp: tree only when partials are MB-sized
-        if numel <= 1_000_000:
-            return rdd.aggregate(zero, seq, comb)
-        return rdd.treeAggregate(zero, seq, comb, depth=2)
-
-    state = None
-    fit_prev, fit, trace = 0.0, 0.0, []
-    it = 0
-    for it in range(1, max_iter + 1):
-        bB, bC = sc.broadcast(B), sc.broadcast(C)
-        pinv_bc = np.linalg.pinv((B.T @ B) * (C.T @ C))
-
-        def update_a(items, _p=pinv_bc, _bB=bB, _bC=bC):
-            # mode-0 update, partition-local: each slab owns its A rows
-            for ids, x in items:
-                m0 = ((x @ _bC.value) * _bB.value[None, :, :]).sum(axis=1)
-                yield ids, x, m0 @ _p
-
-        prev = state
-        state = slabs.mapPartitions(update_a).persist(StorageLevel.MEMORY_AND_DISK)
-
-        def seq1(acc, item, _bC=bC):
-            g, m1 = acc
-            _ids, x, a = item
-            g += a.T @ a
-            m1 += ((x @ _bC.value) * a[:, None, :]).sum(axis=0)
-            return g, m1
-
-        gram_raw, m1_raw = agg(
-            state,
-            (np.zeros((rank, rank)), np.zeros((sj, rank))),
-            seq1,
-            lambda p, q: (p[0] + q[0], p[1] + q[1]),
-            (rank + sj) * rank,
-        )
-
-        d_inv = 1.0 / np.sqrt(np.clip(np.diag(gram_raw), 1e-300, None))
-        gram_a = gram_raw * d_inv[:, None] * d_inv[None, :]  # Ã = A·D⁻¹
-        B = _solve(m1_raw * d_inv[None, :], gram_a * (C.T @ C))
-        B, _ = _normalize(B)
-        bB2 = sc.broadcast(B)
-
-        def seq2(acc, item, _bB2=bB2):
-            _ids, x, a = item
-            return acc + ((np.swapaxes(x, 1, 2) @ _bB2.value) * a[:, None, :]).sum(axis=0)
-
-        m2 = (
-            agg(state, np.zeros((sk, rank)), seq2, lambda p, q: p + q, sk * rank)
-            * d_inv[None, :]
-        )
-        c_raw = _solve(m2, gram_a * (B.T @ B))
-        C, lam = _normalize(c_raw)
-
-        inner = float((m2 * c_raw).sum())
-        norm_model_sq = float(lam @ ((gram_a * (B.T @ B) * (C.T @ C)) @ lam))
-        resid_sq = max(0.0, norm_x_sq - 2.0 * inner + norm_model_sq)
-        fit = 1.0 - np.sqrt(resid_sq) / np.sqrt(norm_x_sq)
-        trace.append(fit)
-
-        for b in (bB, bC, bB2):
-            b.unpersist()
-        if prev is not None:
-            prev.unpersist()
-        if it > 1 and abs(fit - fit_prev) < tol:
-            break
-        fit_prev = fit
-
-    order = np.argsort(-lam)
-    a_blocks = state.map(
-        lambda t, _d=d_inv, _o=order: (t[0], (t[2] * _d[None, :])[:, _o])
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    a_blocks.count()  # materialize before releasing the parents
-    state.unpersist()
+    driver, never broadcast) — the :func:`_cp_als` loop with the final A
+    blocks persisted next to where the slabs were."""
+    model, slabs = _cp_als(coords, rank, tol, max_iter, seed, n_parts)
+    model.a_blocks.persist(StorageLevel.MEMORY_AND_DISK)
+    model.a_blocks.count()  # materialize before releasing the slabs
     slabs.unpersist()
-    return CPModelDist(
-        a_blocks=a_blocks, B=B[:, order], C=C[:, order], lam=lam[order],
-        fit=float(fit), n_iter=it, fit_trace=trace, shape=shape,
-    )
+    return model
 
 
 def dist_factors_a_df(spark: SparkSession, model: CPModelDist, scale: int = 4) -> DataFrame:
@@ -580,7 +498,7 @@ def tensor_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1e8-slice scale the distributed-A path targets)."""
     coords = _coords(spark, sf_dir)
     shape = tensor_shape(coords)
-    slabs = build_slices(coords, shape, n_parts=8, persist=False)
+    slabs = build_slices(coords, shape, persist=False)
     meta = slabs.flatMap(
         lambda it: [
             (
@@ -677,7 +595,7 @@ def tucker_hosvd(
     spark: SparkSession,
     coords: DataFrame,
     ranks: tuple[int, int, int] = (3, 3, 3),
-    n_parts: int = 8,
+    n_parts: int | None = None,
 ) -> TuckerModel:
     """TUCKER DECOMPOSITION via sequentially-truncated HOSVD over the CP
     engine's slab layout (beyond the reference's CP surface; standard

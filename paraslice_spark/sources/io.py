@@ -53,7 +53,9 @@ def scaled_scan_partitions(
     row count comes from the parquet FOOTER (driver-side metadata read, no
     job); the result is clamped to spark.sql.shuffle.partitions — the knob
     clusters already size.  Callers skip the repartition entirely when
-    this returns 1, keeping small-SF plans byte-identical."""
+    this returns 1, keeping small-SF plans byte-identical.  An unreadable
+    footer also returns 1: the size is unknown, and spreading a table that
+    may be tiny would change its plan for nothing."""
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     try:
         import pyarrow.parquet as pq
@@ -61,9 +63,9 @@ def scaled_scan_partitions(
         rows = pq.ParquetFile(
             f"{sf_dir.rstrip('/')}/{table}.parquet"
         ).metadata.num_rows
-        return max(1, min(cap, rows // rows_per_partition))
     except Exception:
-        return cap
+        return 1
+    return max(1, min(cap, rows // rows_per_partition))
 
 
 def _repair_events(df: DataFrame) -> DataFrame:

@@ -332,7 +332,7 @@ def test_ann_recall_default_plan_has_no_pair_join(spark, monkeypatch):
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" in p, p
 
 
-def test_emb_base_partitions_scale_adaptive(spark, tmp_path):
+def test_emb_base_partitions_scale_adaptive(spark, tmp_path, monkeypatch):
     """r16: the embeddings base repartitions by footer row count (~2000
     rows/partition, capped at shuffle partitions) so the Arrow kernel
     stages parallelize on big corpora; at the fixture SFs the count is 1
@@ -358,5 +358,12 @@ def test_emb_base_partitions_scale_adaptive(spark, tmp_path):
         str(tmp_path / "embeddings.parquet"),
     )
     assert _emb_base_partitions(spark, str(tmp_path)) == cap
-    # unreadable path falls back to the cap, never raises
-    assert _emb_base_partitions(spark, str(tmp_path / "missing")) == cap
+    # an unreadable footer means an unknown size: no spread (1), never the
+    # cap, never raises — whether the file is missing or the read fails
+    assert _emb_base_partitions(spark, str(tmp_path / "missing")) == 1
+
+    def unreadable(*_args, **_kwargs):
+        raise OSError("footer unreadable")
+
+    monkeypatch.setattr(pq, "ParquetFile", unreadable)
+    assert _emb_base_partitions(spark, str(tmp_path)) == 1

@@ -8,19 +8,27 @@ import pytest
 from paraslice_spark.operators.tensor import (
     build_slices,
     parafac,
+    parafac_distributed,
+    slab_count,
     tensor_build_coords,
     tensor_shape,
 )
 from tests.conftest import SF_SMALL
 
 
-def _planted_coords(spark, si=12, sj=6, sk=10, rank=3, seed=7):
-    """Dense rank-`rank` tensor from seeded factors, as a coords DataFrame."""
+def _planted(si=12, sj=6, sk=10, rank=3, seed=7, noise=0.0):
+    """Dense rank-`rank` tensor from seeded factors, plus Gaussian noise
+    at ``noise`` times the signal's RMS."""
     rng = np.random.default_rng(seed)
     A = rng.standard_normal((si, rank))
     B = rng.standard_normal((sj, rank))
     C = rng.standard_normal((sk, rank))
     X = np.einsum("ir,jr,kr->ijk", A, B, C)
+    return X + noise * np.sqrt((X**2).mean()) * rng.standard_normal(X.shape)
+
+
+def _to_coords(spark, X):
+    si, sj, sk = X.shape
     rows = [
         (i, j, k, float(X[i, j, k]))
         for i in range(si)
@@ -28,6 +36,37 @@ def _planted_coords(spark, si=12, sj=6, sk=10, rank=3, seed=7):
         for k in range(sk)
     ]
     return spark.createDataFrame(rows, schema="i long, j long, k long, v double")
+
+
+def _planted_coords(spark, **kw):
+    """:func:`_planted` as a coords DataFrame."""
+    return _to_coords(spark, _planted(**kw))
+
+
+def _textbook_cp_als(X, rank, seed, n_iter):
+    """Reference CP-ALS in plain numpy: the textbook sweep of three full
+    MTTKRPs (A, then B with the normalized A, then C), started from the
+    seeded B and C the engine draws, with the fit read from an explicit
+    reconstruction.  Returns (fit trace, λ, A, B, C), components ordered
+    by λ descending."""
+    rng = np.random.default_rng(seed)
+
+    def unit(f):
+        return f / np.linalg.norm(f, axis=0)
+
+    B = unit(rng.standard_normal((X.shape[1], rank)))
+    C = unit(rng.standard_normal((X.shape[2], rank)))
+    trace = []
+    for _ in range(n_iter):
+        A = unit(np.einsum("ijk,jr,kr->ir", X, B, C) @ np.linalg.pinv((B.T @ B) * (C.T @ C)))
+        B = unit(np.einsum("ijk,ir,kr->jr", X, A, C) @ np.linalg.pinv((A.T @ A) * (C.T @ C)))
+        C = np.einsum("ijk,ir,jr->kr", X, A, B) @ np.linalg.pinv((A.T @ A) * (B.T @ B))
+        lam = np.linalg.norm(C, axis=0)
+        C = C / lam
+        Xhat = np.einsum("r,ir,jr,kr->ijk", lam, A, B, C)
+        trace.append(1.0 - np.linalg.norm(X - Xhat) / np.linalg.norm(X))
+    o = np.argsort(-lam)
+    return trace, lam[o], A[:, o], B[:, o], C[:, o]
 
 
 def test_planted_factor_recovery(spark):
@@ -69,6 +108,15 @@ def test_slices_cover_tensor_exactly(spark):
     slabs.unpersist()
     want = coords.groupBy().sum("v").first()[0]
     assert total == pytest.approx(want, rel=1e-9)
+
+
+def test_slab_count_rule(spark):
+    """One slab per core until a slab would pass 128 MB of float64,
+    never more slabs than mode-0 slices."""
+    cores = spark.sparkContext.defaultParallelism
+    assert slab_count(spark, (1500, 5, 720)) == cores  # events sf0.1: 43 MB
+    assert slab_count(spark, (3, 5, 720)) == min(3, cores)
+    assert slab_count(spark, (10**6, 64, 64)) == 245  # 32.8 GB / 128 MB
 
 
 def test_distributed_planted_factor_recovery(spark):
@@ -172,3 +220,65 @@ def test_tucker_declared_query_runs(spark):
     rows = df.collect()
     assert len(rows) == 27  # 3x3x3 core
     assert all(r["core_abs"] >= 0 for r in rows)
+
+
+def test_fused_loop_matches_textbook_sweep(spark):
+    """The one-job-per-iteration loop (A rows recomputed per slab, B and C
+    derived from the slice-contracted partial) is the textbook sweep: fit
+    trace, λ and all three factors agree with the numpy reference."""
+    X = _planted(si=20, seed=19, noise=0.3)
+    model = parafac(spark, _to_coords(spark, X), rank=3, tol=-1.0, max_iter=5, seed=6, n_parts=4)
+    trace, lam, A, B, C = _textbook_cp_als(X, rank=3, seed=6, n_iter=5)
+    assert 0.5 < trace[-1] < 0.99  # noisy: the fit identity is not near 1
+    np.testing.assert_allclose(model.fit_trace, trace, rtol=0, atol=1e-9)
+    np.testing.assert_allclose(model.lam, lam, rtol=1e-9)
+    for got, want in ((model.A, A), (model.B, B), (model.C, C)):
+        np.testing.assert_allclose(got, want, rtol=0, atol=1e-9)
+
+
+#: Jobs a fit launches outside its ALS iterations: the tensor_shape scalar
+#: read, and the final A blocks (collected by parafac, materialized by
+#: parafac_distributed).
+_FIXED_JOBS = 2
+
+
+@pytest.mark.parametrize("fit", [parafac, parafac_distributed], ids=["local", "dist"])
+def test_one_job_per_iteration(spark, fit):
+    """Each ALS iteration is exactly one Spark job, ‖X‖² included."""
+    coords = _planted_coords(spark, seed=29).cache()
+    coords.count()
+    sc = spark.sparkContext
+    launched = []
+    for n in (2, 4):
+        group = f"cp-als-jobs-{fit.__name__}-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            model = fit(spark, coords, rank=3, tol=-1.0, max_iter=n, seed=1, n_parts=3)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert model.n_iter == n
+        launched.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        if fit is parafac_distributed:
+            model.a_blocks.unpersist()
+    coords.unpersist()
+    assert launched == [2 + _FIXED_JOBS, 4 + _FIXED_JOBS]
+
+
+def test_local_and_distributed_fits_agree(spark):
+    """parafac and parafac_distributed run the same loop from the same
+    seeded B and C: equal λ, fits and factors, and parafac's A is the
+    distributed model's collected a_blocks."""
+    coords = _planted_coords(spark, seed=31, noise=0.2)
+    local = parafac(spark, coords, rank=3, max_iter=6, seed=9, n_parts=3)
+    dist = parafac_distributed(spark, coords, rank=3, max_iter=6, seed=9, n_parts=3)
+    for got, want in (
+        (dist.lam, local.lam), (dist.fit_trace, local.fit_trace),
+        (dist.B, local.B), (dist.C, local.C),
+    ):
+        np.testing.assert_allclose(got, want, rtol=1e-10)
+    assert dist.fit == pytest.approx(local.fit, rel=1e-10)
+    A = np.zeros_like(local.A)
+    for ids, rows in dist.a_blocks.collect():
+        A[ids] = rows
+    dist.a_blocks.unpersist()
+    np.testing.assert_allclose(A, local.A, rtol=1e-10)
